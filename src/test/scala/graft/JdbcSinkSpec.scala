@@ -56,4 +56,18 @@ class JdbcSinkSpec extends SparkSpec {
     assert(acc.value == 1000L,
       s"upstream evaluated ${acc.value} row-computations for 1000 rows")
   }
+
+  test("write appends a non-empty frame and returns the rows written") {
+    val df = Seq((1L, "a"), (2L, "b"), (3L, "c"), (4L, "d")).toDF("id", "name")
+    assert(JdbcSink.write(df, url, "sink_t4", props) == 4L)
+    assert(spark.read.jdbc(url, "sink_t4", props).orderBy("id").as[(Long, String)].collect()
+      .toSeq == Seq((1L, "a"), (2L, "b"), (3L, "c"), (4L, "d")))
+  }
+
+  test("write failures are logged and swallowed, not thrown") {
+    val df = Seq((1L, "a")).toDF("id", "name")
+    val bad = new Properties()
+    bad.setProperty("driver", "org.apache.derby.iapi.jdbc.AutoloadedDriver")
+    assert(JdbcSink.write(df, "jdbc:derby:/nonexistent/path/db", "t", bad) == 0L)
+  }
 }
